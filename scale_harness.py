@@ -1026,9 +1026,10 @@ def measure_silver_steps(spark, src_dir: str, base: str, factor: int) -> list[di
     separately-timed write of the same repartitioned+sorted frame to a
     throwaway table, so staged-swap overhead ≈ bucket_write −
     plain_write (the gold r14 method)."""
-    from pyspark.sql import functions as F
-
     from spaceparts_data_pipeline_spark.operators.dedup import infer_keys
+    from spaceparts_data_pipeline_spark.operators.maintenance import (
+        align_writers_to_partitions,
+    )
     from spaceparts_data_pipeline_spark.plans import bronze as bronze_plan
     from spaceparts_data_pipeline_spark.plans import silver as silver_plan
 
@@ -1073,8 +1074,8 @@ def measure_silver_steps(spark, src_dir: str, base: str, factor: int) -> list[di
                         out = clean.withColumn(
                             silver_plan.PARTITION_COL,
                             silver_plan._bucket_expr(keys, silver_plan.DEFAULT_N_BUCKETS))
-                        out = (out.repartition(F.col(silver_plan.PARTITION_COL))
-                               .sortWithinPartitions(silver_plan.PARTITION_COL, *keys))
+                        out = align_writers_to_partitions(
+                            spark, out, [silver_plan.PARTITION_COL], sort_by=keys)
                         t0 = time.perf_counter()
                         out.write.mode("overwrite") \
                             .partitionBy(silver_plan.PARTITION_COL) \

@@ -69,21 +69,6 @@ def dsum_sql(expr: str, alias: str, scale: int = 6) -> str:
     return f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(27,{scale}))) AS VARCHAR) AS DOUBLE) AS {alias}"
 
 
-def davg_sql(expr: str, alias: str, scale: int = 6) -> str:
-    """DuckDB-SQL twin of :func:`davg` (same VARCHAR round-trip)."""
-    return f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(27,{scale}))) AS VARCHAR) AS DOUBLE) / COUNT(*) AS {alias}"
-
-
-def null_token_to_null(col: Column | str) -> Column:
-    """Map placeholder strings ('', 'NULL', 'N/A', …, case/space-insensitive)
-    to real NULLs; otherwise keep the original value.
-
-    Reference: silver_processor.py:170-177 / Silver_full_load.ipynb:1 (cell 8).
-    """
-    c = _c(col)
-    return F.when(F.trim(F.upper(c)).isin(*NULL_TOKENS), F.lit(None)).otherwise(c)
-
-
 def standardize_key(col: Column | str) -> Column:
     """Business-key normalization: upper(trim) then null-token scrub.
 

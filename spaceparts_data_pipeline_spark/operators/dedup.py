@@ -61,15 +61,6 @@ def dedup_latest(
     )
 
 
-def dedup_exact(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
-    """Exact duplicate removal (hash-based distinct) over ``subset`` or all
-    columns. For full-row distinct this is ``df.distinct()`` — a map-side
-    combinable aggregation, cheaper than a window."""
-    if subset is None:
-        return df.distinct()
-    return df.dropDuplicates(subset)
-
-
 # -- cross-run incremental dedup --------------------------------------------
 
 def incremental_dedup(

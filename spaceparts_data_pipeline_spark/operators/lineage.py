@@ -105,13 +105,15 @@ def scale_share(frame: DataFrame, mode: str | None = None) -> bool:
     per core). Callers pass the SCAN-LEVEL input frame (the corpus /
     training table read).
 
-    Scan parallelism comes from driver-side metadata only — the
-    ``inputFiles()`` listing, then local parquet footers for row-group
-    counts (parquet cannot split below row-group granularity), the
+    Scan parallelism comes from driver-side metadata only, the
     ``similarity._ensure_parallel`` pattern: never a ``df.rdd``
     conversion or a Spark job in live query paths (round-5 verdict).
-    Unknown layouts (remote URI schemes, non-file plans, unreadable
-    footers) keep the unshared shape — a cluster operator at real
+    First the ``inputFiles()`` listing: enough files shares on any URI
+    scheme. Below that, local parquet footers add row-group counts
+    (parquet cannot split below row-group granularity); ``file:`` URIs
+    are percent-decoded before opening. A layout whose footers cannot
+    be read locally (remote URI schemes, non-file plans, unreadable
+    footers) keeps the unshared shape — a cluster operator at real
     data-to-core ratios pins ``shareSubtrees=on`` instead.
 
     ``mode`` lets a caller that already resolved :func:`share_mode`
@@ -142,7 +144,9 @@ def scale_share(frame: DataFrame, mode: str | None = None) -> bool:
         if parsed.scheme not in ("", "file"):
             return False  # remote layout: signal unknown, stay unshared
         try:
-            n_splits += pq.ParquetFile(parsed.path or f).metadata.num_row_groups
+            local = urllib.parse.unquote(parsed.path) if parsed.scheme else f
+            with pq.ParquetFile(local) as pf:
+                n_splits += pf.metadata.num_row_groups
         except Exception:
             return False
         if n_splits >= need:

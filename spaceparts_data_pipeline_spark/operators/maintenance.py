@@ -1,19 +1,30 @@
-"""Table maintenance: small-file compaction (the plain-Parquet analog of
-the reference's Delta ``OPTIMIZE`` / ``optimizeWrite`` / ``autoCompact``
-— Silver_full_load.ipynb:1 cells 6 and 16).
+"""Table maintenance and the one partitioned-write commit.
 
-Append-flavored incremental layers (bronze K2, quarantine side-sinks)
-add a few files per run; after N runs a scan pays N file-open costs and
-the small row groups defeat min/max skipping. ``compact_table`` rewrites
-the table (or just the listed partitions) into ~``target_file_mb``
-files:
+Every partitioned write is laid out by :func:`align_writers_to_partitions`
+(one writer per partition value, optional key sort inside each file).
+Two commits sit on that layout:
 
-- unpartitioned tables: stage-write to ``<table>__compact`` then swap
-  via catalog rename — no O(table) executor-memory checkpoint, and a
-  crash mid-write leaves the original table intact (the staging table
-  is simply re-created next run).
+- :func:`overwrite_via_staging` — crash-safe, reader-isolated full
+  rewrite through a versioned swap;
+- :func:`overwrite_partitions` — dynamic-partition overwrite of only the
+  partitions the frame holds rows for. The gold MERGE
+  (``operators.merge.merge_into_table``), silver's incremental upsert
+  and partition-scoped :func:`compact_table` all commit through it, and
+  it holds the package's only switch of the session's
+  ``partitionOverwriteMode``.
+
+Small-file compaction is the plain-Parquet analog of the reference's
+Delta ``OPTIMIZE`` / ``optimizeWrite`` / ``autoCompact``
+(Silver_full_load.ipynb:1 cells 6 and 16). Append-flavored incremental
+layers (bronze K2, quarantine side-sinks) add a few files per run; after
+N runs a scan pays N file-open costs and the small row groups defeat
+min/max skipping. ``compact_table`` rewrites the table (or just the
+listed partitions) into ~``target_file_mb`` files:
+
+- whole tables: a staged versioned swap — no O(table) executor-memory
+  checkpoint, and a crash mid-write leaves the current version intact.
 - partitioned tables with an explicit ``partition_values`` list:
-  dynamic-partition-overwrite of only those partitions (bounded
+  :func:`overwrite_partitions` of only those partitions (bounded
   checkpoint) — the incremental-friendly form: compact the partitions
   this run's delta touched.
 """
@@ -668,7 +679,8 @@ def _xxhash64_salt_cols(df, exclude: tuple | list = ()) -> list:
             if f.name not in exclude and hashable(f.dataType)]
 
 
-def align_writers_to_partitions(spark, df, pcols: list[str]):
+def align_writers_to_partitions(spark, df, pcols: list[str],
+                                sort_by: list[str] | None = None):
     """ALIGN WRITERS TO PARTITION DIRS before a partitioned write:
     without this every map task writes to every partition value's
     directory — T tasks × P months ≈ T·P tiny files per table
@@ -683,10 +695,14 @@ def align_writers_to_partitions(spark, df, pcols: list[str]):
     computed over the xxhash64-hashable NON-partition columns —
     map/variant columns can't feed a hash and partition columns are
     constant within the value being spread; if nothing hashable
-    remains, spark_partition_id is the deterministic fallback). Shared by the staged
-    full overwrite and the incremental merge path so both have the
-    same skew relief. Callers that pre-align AND order their writers
-    (silver's bucket sort) skip this to keep their shape."""
+    remains, spark_partition_id is the deterministic fallback).
+
+    ``sort_by`` sorts each writer's rows by ``(*pcols, *sort_by)`` so
+    parquet row-group min/max statistics prune key lookups. The
+    partition columns lead the sort: the partitioned file writer
+    requires task rows ordered by them and injects its OWN sort
+    (destroying this one) unless the incoming ordering already
+    satisfies that requirement as a prefix."""
     fpp = int(spark.conf.get("spark.spaceparts.filesPerPartition", "1"))
     parts = [F.col(c) for c in pcols]
     if fpp > 1:
@@ -698,15 +714,46 @@ def align_writers_to_partitions(spark, df, pcols: list[str]):
             # map-task retry re-reads the same split), so it still
             # spreads each partition value over up to fpp writers
             # (bounded by the input partition count) — and we say so.
-            import logging
-
-            logging.getLogger(__name__).warning(
+            _log.warning(
                 "filesPerPartition=%d but no xxhash64-hashable column; "
                 "salting by spark_partition_id (spread capped at the "
                 "input partition count)", fpp)
             salt_cols = [F.spark_partition_id()]
         parts.append(F.pmod(F.xxhash64(*salt_cols), F.lit(fpp)))
-    return df.repartition(*parts)
+    out = df.repartition(*parts)
+    return out.sortWithinPartitions(*pcols, *sort_by) if sort_by else out
+
+
+#: The session conf :func:`overwrite_partitions` switches around its
+#: ``insertInto``. Path writes use the per-writer
+#: ``.option("partitionOverwriteMode", "dynamic")`` instead; ``insertInto``
+#: ignores that option, so a table commit must go through the conf.
+_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+
+
+def overwrite_partitions(spark: SparkSession, phys: str, df, partition_col: str,
+                         sort_by: list[str] | None = None) -> None:
+    """Replace the partitions of the PHYSICAL table ``phys`` that ``df``
+    holds rows for; every other partition stays as it is on disk.
+
+    ``df`` is projected to the table's column order (``insertInto``
+    matches columns by position), laid out by
+    :func:`align_writers_to_partitions` (one file per touched partition
+    value, not tasks × values), then ``localCheckpoint``-ed: ``df`` is
+    usually derived from the very partitions the commit replaces, so it
+    must be fully read before the first file is deleted. The checkpoint
+    holds only the touched slice. The commit is a dynamic-partition
+    ``insertInto`` under a save/set/restore of the session conf — the
+    package's only switch of ``partitionOverwriteMode``."""
+    out = align_writers_to_partitions(
+        spark, df.select(*spark.table(phys).columns), [partition_col], sort_by)
+    out = out.localCheckpoint(eager=True)
+    prev = spark.conf.get(_OVERWRITE_MODE, "static")
+    spark.conf.set(_OVERWRITE_MODE, "dynamic")
+    try:
+        out.write.mode("overwrite").insertInto(phys)
+    finally:
+        spark.conf.set(_OVERWRITE_MODE, prev)
 
 
 def overwrite_via_staging(
@@ -715,7 +762,7 @@ def overwrite_via_staging(
     df,
     partition_by: str | list[str] | None = None,
     retain_versions: int | None = None,
-    align_writers: bool = True,
+    sort_by: list[str] | None = None,
 ) -> None:
     """Crash-safe full overwrite with READER ISOLATION: physical data
     lives in ``{table}__v{N}`` and ``{table}`` is a view over the
@@ -761,6 +808,10 @@ def overwrite_via_staging(
     pre-versioned rename window occurs once, at migration, never again.
     Write paths must address :func:`resolve_physical` — appends,
     ``insertInto`` and compaction don't work against a view.
+
+    A partitioned write is laid out by
+    :func:`align_writers_to_partitions`, with ``sort_by`` as the key
+    sort inside each file.
     """
     staging, old = f"{table}__staging", f"{table}__old"
     keep = _retain_versions(spark, retain_versions)
@@ -771,8 +822,8 @@ def overwrite_via_staging(
     _swap_db, _ = _split_db(table)
     _db_loc = _db_location(spark, _swap_db or spark.catalog.currentDatabase())
     _clear_orphan_location(spark, staging, loc=_db_loc)
-    if pcols and align_writers:
-        df = align_writers_to_partitions(spark, df, pcols)
+    if pcols:
+        df = align_writers_to_partitions(spark, df, pcols, sort_by)
     w = df.write.mode("overwrite")
     if pcols:
         w = w.partitionBy(*pcols)
@@ -814,6 +865,12 @@ def compact_table(
 ) -> dict:
     """Rewrite ``table`` into ~``target_file_mb``-sized files.
 
+    With ``partition_values`` the listed partitions are rewritten through
+    :func:`overwrite_partitions`, one file per partition value; a whole
+    table goes through :func:`overwrite_via_staging`, whose writer
+    alignment gives a partitioned table the same one-file-per-value
+    layout.
+
     Returns {"n_files_before", "n_files_after", "total_bytes"}. No-op
     (beyond a stats probe) when the table already has ≤ the target file
     count.
@@ -831,23 +888,11 @@ def compact_table(
             " partition_values for a full-table rewrite"
         )
     if pcols and partition_values is not None:
-        # partition-scoped: rewrite only the listed partitions
         pcol = pcols[0]
-        sub = df.filter(F.col(pcol).isin(partition_values))
-        # one shuffle keyed by partition value → one writer task per
-        # value → one file per compacted partition (AQE coalesces)
-        out = sub.repartition(F.col(pcol)).localCheckpoint(eager=True)
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out.write.mode("overwrite").insertInto(phys)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        overwrite_partitions(spark, phys, df.filter(F.col(pcol).isin(partition_values)), pcol)
     elif stats["n_files"] > target_files:
         if pcols:
-            overwrite_via_staging(
-                spark, table, df.repartition(*[F.col(c) for c in pcols]),
-                partition_by=pcols, align_writers=False)
+            overwrite_via_staging(spark, table, df, partition_by=pcols)
         else:
             overwrite_via_staging(spark, table, df.repartition(target_files))
 

@@ -18,6 +18,11 @@ MERGE semantics notes (SURVEY.md §7 "hard parts"):
 Scale: the anti-join shuffles target by key once; with the target written
 bucketed by the merge keys the shuffle disappears on the target side and
 only the (small) source shuffles. AQE skew-join covers hot keys.
+
+Commit: :func:`merge_into_table` and silver's incremental upsert read
+the partitions a delta touches (:func:`touched_partition_filter`) and
+write them back through ``operators.maintenance.overwrite_partitions``,
+the package's one partitioned-write commit.
 """
 
 from __future__ import annotations
@@ -110,7 +115,7 @@ def collect_touched_partitions(
     return [r[0] for r in rows]
 
 
-def _touched_partition_filter(source: DataFrame, partition_col: str):
+def touched_partition_filter(source: DataFrame, partition_col: str):
     """Predicate selecting the target partitions the ``source`` delta
     touches. The collect is bounded: one value per touched partition
     (months/buckets), never rows — enforced by
@@ -136,15 +141,16 @@ def merge_into_table(
     When the table is partitioned on ``partition_col`` (derived from the
     merge keys, so an upsert never moves a row across partitions), the
     merge reads only the partitions the delta touches and commits them
-    with dynamic partition overwrite — O(delta partitions) I/O per run
-    instead of the O(table) full rewrite the reference's Delta ``MERGE
-    INTO`` also avoids (Gold_incremental_load.ipynb:1 cell 10). The
-    ``localCheckpoint`` self-overwrite guard then materializes only the
-    touched slice, not the table.
+    through ``operators.maintenance.overwrite_partitions`` (dynamic
+    partition overwrite) — O(delta partitions) I/O per run instead of
+    the O(table) full rewrite the reference's Delta ``MERGE INTO`` also
+    avoids (Gold_incremental_load.ipynb:1 cell 10).
 
     Fallback (no/unknown partitioning): full-table merge + rewrite.
     """
-    from spaceparts_data_pipeline_spark.operators.maintenance import resolve_physical
+    from spaceparts_data_pipeline_spark.operators.maintenance import (
+        overwrite_partitions, overwrite_via_staging, resolve_physical,
+    )
 
     # Version-managed tables (reader-isolated staged swap) store data in
     # `{table}__v{N}` behind a view — the partition-metadata probe and
@@ -156,30 +162,10 @@ def merge_into_table(
         and partition_col in physical_partition_cols(spark, phys)
         and partition_col in source.columns
     ):
-        cond = _touched_partition_filter(source, partition_col)
-        sub = target.filter(cond)
+        sub = target.filter(touched_partition_filter(source, partition_col))
         merged = merge_upsert(sub, source.select(*target.columns), keys, order_col=order_col)
-        # align writers to the touched partition dirs (one writer per
-        # value, AQE coalesces) BEFORE the checkpoint: otherwise every
-        # checkpoint partition writes a file into every touched dir —
-        # tasks × dirs small files accumulating run over run until
-        # compaction. Shared with overwrite_via_staging so the same
-        # spark.spaceparts.filesPerPartition salt relieves a skewed /
-        # oversized touched month here too.
-        from spaceparts_data_pipeline_spark.operators.maintenance import (
-            align_writers_to_partitions,
-        )
-
-        merged = align_writers_to_partitions(spark, merged, [partition_col])
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.localCheckpoint(eager=True).write.mode("overwrite").insertInto(phys)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        overwrite_partitions(spark, phys, merged, partition_col)
     else:
-        from spaceparts_data_pipeline_spark.operators.maintenance import overwrite_via_staging
-
         merged = merge_upsert(target, source.select(*target.columns), keys, order_col=order_col)
         # staged swap: materializes the merge before the old table drops,
         # so no executor-memory checkpoint and a crash can't lose the table.

@@ -498,30 +498,6 @@ def _band_signature_fn(id_col: str, vec_col: str, dim: int, n_planes: int, n_ban
     return fn
 
 
-def _pair_cosine_fn(a_id: str, b_id: str, a_vec: str, b_vec: str):
-    """mapInPandas kernel: exact cosine per candidate row via batched
-    row-wise dot products (einsum), the vectorized twin of :func:`cosine`."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[a_vec]])
-            B = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[b_vec]])
-            cos = np.einsum("ij,ij->i", A, B) / (
-                np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-            )
-            yield pd.DataFrame({
-                "id_a": pdf[a_id].to_numpy(), "id_b": pdf[b_id].to_numpy(), "__cos": cos,
-            })
-
-    return fn
-
-
 def _bucket_pairs_fn(id_col: str, vec_col: str, threshold: float, chunk: int = 2048):
     """applyInPandas kernel over one COARSE group of (band, sig) buckets:
     for every bucket inside the group, all within-bucket pairs at-or-above

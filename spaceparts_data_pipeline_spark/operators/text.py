@@ -51,13 +51,6 @@ def punct_count(text: Column | str) -> Column:
     return F.regexp_count(t, F.lit(PUNCT_PATTERN))
 
 
-def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append n_tokens / n_chars_computed columns."""
-    return df.withColumn("n_tokens", token_count(text_col)).withColumn(
-        "n_chars_computed", F.length(text_col)
-    )
-
-
 def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Append punctuation/stopword ratios and a boolean quality gate
     (the standard cheap pre-filters of LLM data pipelines)."""

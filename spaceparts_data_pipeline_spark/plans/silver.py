@@ -17,7 +17,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spaceparts_data_pipeline_spark.operators.dedup import dedup_latest, infer_keys
-from spaceparts_data_pipeline_spark.operators.merge import physical_partition_cols, upsert_union_dedup
+from spaceparts_data_pipeline_spark.operators.merge import (
+    physical_partition_cols, touched_partition_filter, upsert_union_dedup,
+)
 from spaceparts_data_pipeline_spark.operators.quality import drop_all_null, quarantine_split
 from spaceparts_data_pipeline_spark.operators.standardize import standardize_types
 from spaceparts_data_pipeline_spark.plans import logs
@@ -62,21 +64,11 @@ def _write_partitioned(clean: DataFrame, target: str, keys: list[str],
     )
 
     out = clean.withColumn(PARTITION_COL, _bucket_expr(keys, n_buckets))
-    # one shuffle by bucket so each partition dir gets few, large files
-    # (AQE coalesces); without it every task writes a file per bucket.
-    out = out.repartition(F.col(PARTITION_COL))
-    if sort_by:
-        # PARTITION_COL leads the sort: the partitioned file writer
-        # requires task rows ordered by the partition columns and injects
-        # its OWN sort (destroying this one) unless the incoming ordering
-        # already satisfies that requirement as a prefix.
-        out = out.sortWithinPartitions(PARTITION_COL, *sort_by)
     # staged swap: a crash mid-write leaves the previous table intact;
-    # align_writers=False — the bucket repartition + sort above IS the
-    # alignment, and a second repartition would destroy the sort
+    # its writer alignment gives each bucket dir few, key-sorted files
     spark = clean.sparkSession
-    overwrite_via_staging(spark, target, out,
-                          partition_by=PARTITION_COL, align_writers=False)
+    overwrite_via_staging(spark, target, out, partition_by=PARTITION_COL,
+                          sort_by=sort_by)
     set_pipeline_prop(spark, resolve_physical(spark, target),
                       N_BUCKETS_PROP, n_buckets)
 
@@ -304,7 +296,9 @@ def _run_incremental_inner(
     log_table: str,
     log_buffer=None,
 ) -> dict:
-    from spaceparts_data_pipeline_spark.operators.maintenance import resolve_physical
+    from spaceparts_data_pipeline_spark.operators.maintenance import (
+        overwrite_partitions, resolve_physical,
+    )
 
     target = f"silver_{table}"
     n_buckets = DEFAULT_N_BUCKETS
@@ -325,31 +319,11 @@ def _run_incremental_inner(
             and all(c in existing.columns for c in clean.columns)
         )
         if partitioned:
-            from spaceparts_data_pipeline_spark.operators.merge import (
-                collect_touched_partitions,
-            )
-
             clean_p = clean.withColumn(PARTITION_COL, _bucket_expr(keys, n_buckets))
-            # bounded by contract: PARTITION_COL is a hash bucket
-            # (DEFAULT_N_BUCKETS values), never row-like cardinality
-            parts = collect_touched_partitions(clean_p, PARTITION_COL)
-            sub = existing.filter(F.col(PARTITION_COL).isin(parts))
+            sub = existing.filter(touched_partition_filter(clean_p, PARTITION_COL))
             merged = upsert_union_dedup(sub, clean_p, keys=keys, order_col=order_col)
-            # align writers to the touched buckets (one file per bucket,
-            # not tasks × buckets) and restore the full-write path's
-            # key-sorted files (parquet min/max pruning) on the
-            # rewritten buckets too
-            merged = (merged.select(*existing.columns)
-                      .repartition(F.col(PARTITION_COL))
-                      .sortWithinPartitions(PARTITION_COL, *keys))
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                # checkpoint materializes only the touched buckets
-                merged.localCheckpoint(eager=True) \
-                    .write.mode("overwrite").insertInto(phys)
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            # key-sorted files (parquet min/max pruning), as the full write
+            overwrite_partitions(spark, phys, merged, PARTITION_COL, sort_by=keys)
         else:
             # schema drift or legacy unpartitioned table: one-time full
             # rewrite with the union schema, re-bucketed going forward.

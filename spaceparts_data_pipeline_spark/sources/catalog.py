@@ -39,12 +39,6 @@ def discover_tables(spark: SparkSession, pattern: str = "bronze_*", database: st
     return sorted(allowed)
 
 
-def table_row_count(spark: SparkSession, table: str) -> int:
-    """Row-count probe (S5). On Parquet this is metadata-cheap (count
-    pushdown reads footers, not data)."""
-    return spark.table(table).count()
-
-
 def column_metadata(spark: SparkSession, table: str) -> list[dict]:
     """Column-metadata probe (S6): name, type, nullability."""
     return [

@@ -14,12 +14,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: the driver's synthetic star-schema tables (TESTDATA.md)
-TESTDATA_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
 #: watermark overlap for late/clock-skewed rows
 #: (bronze_incremental_load.ipynb:1 cell 17 `safe_timestamp`, 1 hour)
 DEFAULT_OVERLAP = dt.timedelta(hours=1)
@@ -91,10 +85,6 @@ def _maybe_parallelize(spark: SparkSession, df: DataFrame, path: str) -> DataFra
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str, tables=TESTDATA_TABLES) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in tables}
-
-
 def footer_row_count(
     sf_dir: str, name: str, spark: SparkSession | None = None
 ) -> int | None:
@@ -138,11 +128,6 @@ def footer_row_count(
         except Exception:
             return None
     return None
-
-
-def sample_scan(df: DataFrame, n: int = 5) -> DataFrame:
-    """Profiling sample (S7: `SELECT TOP n *`)."""
-    return df.limit(n)
 
 
 def watermark_scan(

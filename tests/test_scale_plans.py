@@ -150,3 +150,24 @@ def test_shard_transforms_preserve_within_shard_structure(spark, sf_small):
                         F.round(dot, 4).alias("d")).collect())
         return {(r["ia"], r["ib"]): r["d"] for r in rows}
     assert pair_dots(s1) == pair_dots(e.select("vec_id", "embedding"))
+
+
+def test_scale_share_reads_footers_under_a_path_with_a_space(spark, tmp_path):
+    """``inputFiles()`` returns percent-encoded URIs (``a%20b``): the
+    footer probe must decode them, or every local layout under a
+    directory with a space silently loses the share. One file holding
+    one row group per core reaches the flip point only through the
+    footer read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spaceparts_data_pipeline_spark.operators.lineage import scale_share
+
+    cores = spark.sparkContext.defaultParallelism
+    root = tmp_path / "a b"
+    root.mkdir()
+    pq.write_table(pa.table({"x": list(range(cores * 10))}),
+                   str(root / "part-0.parquet"), row_group_size=10)
+    df = spark.read.parquet(str(root))
+    assert "%20" in df.inputFiles()[0]
+    assert scale_share(df, mode="auto") is True
